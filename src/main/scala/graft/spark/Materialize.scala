@@ -1,18 +1,26 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Dataset, Encoders, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType}
 
 /** Checkpoint-resumable graph materialization with per-bucket lineage +
-  * metrics (north_rule). Storage abstraction: parquet in-sandbox; the same
-  * writes go to Iceberg (`df.writeTo(table).append()`) in production — only
-  * this object touches storage.
+  * metrics (north_rule). Storage abstraction: parquet (zstd) in-sandbox; the
+  * same writes go to Iceberg (`df.writeTo(table).append()`) in production —
+  * only this object touches storage.
   *
   * Layout under `outDir`:
-  *   staging_b{K}/bucket=N/  bucketed source docs (written once, partition-pruned per-bucket reads)
-  *   triples/bucket=N/   deduplicated triples of bucket N
+  *   staging_b{K}_{fp}/bucket=N/  bucketed source docs, written shuffle-free: every input task writes its own file per bucket
+  *   triples/bucket=N/   triples of bucket N, deduplicated within the bucket (doc_id = smallest doc holding the triple)
   *   errors/bucket=N/    expansion error channel
   *   lineage/            one row per completed bucket (status, counts, attempt)
+  *   graph/              cross-bucket dedup (finalizeGraph)
+  *
+  * A bucket runs only the Spark jobs its writes need: its staged read keeps
+  * one task per staged file, so expansion runs on every core, and the
+  * lineage counts are `Observation`s riding on the docs read and the
+  * triples/errors writes, not extra count passes. Every read-back passes its
+  * schema, so no read launches a schema-inference job.
   *
   * Resume: completed buckets are read from lineage and skipped (the
   * coarse-grained equivalent of a `left_anti` on completed doc_ids — bucket
@@ -23,6 +31,25 @@ object Materialize {
   final case class RunReport(buckets: Int, processed: Int, skipped: Int, triples: Long, errors: Long)
 
   def bucketOf(buckets: Int) = pmod(xxhash64(col("doc_id")), lit(buckets)).cast("int")
+
+  private val tripleCols = Seq("subj", "pred", "obj_kind", "obj_value", "obj_datatype", "obj_lang", "graph")
+  private val stagedSchema = Encoders.product[Doc].schema.add("bucket", IntegerType)
+  private val triplesSchema = Encoders.product[TripleRow].schema
+  private val lineageSchema = Encoders.product[PartitionLineage].schema
+  private val graphSchema = tripleCols.foldLeft(new StructType())(_.add(_, StringType))
+    .add("first_doc", StringType).add("support", LongType)
+
+  /** Every parquet write of this object: zstd, overwrite unless told otherwise. */
+  private def parquet[T](ds: Dataset[T], mode: SaveMode = SaveMode.Overwrite): DataFrameWriter[T] =
+    ds.write.mode(mode).option("compression", "zstd")
+
+  /** Row count of `ds`, reported by the first action that runs it. */
+  private def counted[T](ds: Dataset[T]): (Dataset[T], Observation) = {
+    val obs = Observation()
+    (ds.observe(obs, count(lit(1)).as("n")), obs)
+  }
+
+  private def countOf(obs: Observation): Long = obs.get("n").asInstanceOf[Long]
 
   /** Existence check through the Hadoop FileSystem for the path's scheme —
     * java.io.File is local-FS-only and silently reports false on HDFS/S3,
@@ -52,22 +79,31 @@ object Materialize {
       .digest(normalized.getBytes("UTF-8")).take(8).map(b => f"$b%02x").mkString
   }
 
-  private def completedBuckets(spark: SparkSession, outDir: String): Set[Int] = {
-    if (!pathExists(spark, s"$outDir/lineage")) Set.empty
+  /** (bucket, status, attempt) of every lineage row so far — O(buckets) rows. */
+  private def priorLineage(spark: SparkSession, outDir: String): Seq[(Int, String, Int)] = {
+    if (!pathExists(spark, s"$outDir/lineage")) Seq.empty
     else {
       import spark.implicits._
-      spark.read.parquet(s"$outDir/lineage")
-        .filter(col("status") === "done").select("bucket").as[Int].collect().toSet
+      spark.read.schema(lineageSchema).parquet(s"$outDir/lineage")
+        .select("bucket", "status", "attempt").as[(Int, String, Int)].collect().toSeq
     }
   }
 
-  private def attemptsSoFar(spark: SparkSession, outDir: String): Map[Int, Int] = {
-    if (!pathExists(spark, s"$outDir/lineage")) Map.empty
-    else {
-      import spark.implicits._
-      spark.read.parquet(s"$outDir/lineage").groupBy("bucket").agg(max("attempt").as("a"))
-        .as[(Int, Int)].collect().toMap
-    }
+  /** Where `run` stages `docs` for `buckets` buckets. Bucket count AND an
+    * input fingerprint are part of the path, so a re-run with a different
+    * bucket count or a different input never silently resolves to stale
+    * staging.
+    */
+  private[spark] def stagingDir(docs: Dataset[Doc], outDir: String, buckets: Int): String =
+    s"$outDir/staging_b${buckets}_${inputFingerprint(docs)}"
+
+  /** One bucket's staged docs: a partition-pruned scan with one task per
+    * staged file, i.e. per input task that held docs of the bucket.
+    */
+  private[spark] def stagedBucket(spark: SparkSession, stagingDir: String, bucket: Int): Dataset[Doc] = {
+    import spark.implicits._
+    spark.read.schema(stagedSchema).parquet(stagingDir)
+      .filter(col("bucket") === bucket).drop("bucket").as[Doc]
   }
 
   /** Run the full pipeline over `docs`, bucket by bucket. `failAtBucket`
@@ -84,67 +120,61 @@ object Materialize {
   ): RunReport = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val done = if (resume) completedBuckets(spark, outDir) else Set.empty[Int]
-    val attempts = attemptsSoFar(spark, outDir)
-    val ctxB = RemoteContextPool.broadcastResolved(spark,
-      docs.select(explode(col("spans")).as("s"))
-        .filter(col("s.kind") === "jsonld" && col("s.text").contains(RemoteContextPool.baseIri))
-        .select(col("s.text")).as[String]
-        .flatMap(t => RemoteContextPool.knownIris.filter(t.contains)))
+    val prior = priorLineage(spark, outDir)
+    val done = if (resume) prior.collect { case (b, "done", _) => b }.toSet else Set.empty[Int]
+    val attempts = prior.groupMapReduce(_._1)(_._3)(math.max)
+    // The whole vendored pool: it is a handful of small contexts, and any
+    // span kind (jsonld, or an html page's scripts) may reference any of them.
+    val ctxB = spark.sparkContext.broadcast(RemoteContextPool.pool)
 
-    // Stage the bucketed corpus once, partitioned BY bucket: per-bucket reads
-    // below are partition-pruned scans (only bucket=N files touched), and a
-    // resumed run re-reads staging instead of recomputing the bucketing.
-    // (An earlier formulation used .cache() — at 10^12 docs that pins the
-    // whole corpus in executor memory/disk and dies with any executor; a
-    // staged table is the durable equivalent. Bucket count AND an input
-    // fingerprint are part of the path, so a re-run with a different bucket
-    // count or a different input never silently resolves to stale staging.)
-    val stagingDir = s"$outDir/staging_b${buckets}_${inputFingerprint(docs)}"
-    if (!pathExists(spark, s"$stagingDir/_SUCCESS")) {
-      docs.withColumn("bucket", bucketOf(buckets))
-        .repartition(col("bucket"))
-        .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(stagingDir)
+    // Stage the bucketed corpus once, partitioned BY bucket, with no shuffle:
+    // each input task writes its own file per bucket, so per-bucket reads
+    // below are partition-pruned scans (only bucket=N files touched) that
+    // keep the input's parallelism, and a resumed run re-reads staging
+    // instead of recomputing the bucketing. Staging replaces a `.cache()` of
+    // the bucketed corpus, which at 10^12 docs would pin the whole corpus in
+    // executor memory/disk and be lost with any executor.
+    val staging = stagingDir(docs, outDir, buckets)
+    if (!pathExists(spark, s"$staging/_SUCCESS")) {
+      parquet(docs.withColumn("bucket", bucketOf(buckets))).partitionBy("bucket").parquet(staging)
     }
-    val staged = spark.read.parquet(stagingDir)
     var totalTriples = 0L
     var totalErrors = 0L
     var processed = 0
-    locally {
-      for (b <- 0 until buckets if !done.contains(b)) {
-        if (failAtBucket.contains(b)) throw new RuntimeException(s"injected failure at bucket $b")
-        val t0 = System.nanoTime()
-        val bucketDocs = staged.filter(col("bucket") === b).drop("bucket").as[Doc]
-        val rows = ExpandStage.run(bucketDocs, ctxB).cache()
-        val triples = ExpandStage.triples(rows)
-          .dropDuplicates("subj", "pred", "obj_kind", "obj_value", "obj_datatype", "obj_lang", "graph")
-        val errors = ExpandStage.errors(rows)
-        triples.write.mode(SaveMode.Overwrite).parquet(s"$outDir/triples/bucket=$b")
-        errors.write.mode(SaveMode.Overwrite).parquet(s"$outDir/errors/bucket=$b")
-        val tc = spark.read.parquet(s"$outDir/triples/bucket=$b").count()
-        val ec = spark.read.parquet(s"$outDir/errors/bucket=$b").count()
-        val dc = bucketDocs.count()
-        rows.unpersist()
-        val lineage = Seq(PartitionLineage(b, dc, tc, ec, "done",
-          attempts.getOrElse(b, 0) + 1, (System.nanoTime() - t0) / 1000000)).toDS()
-        lineage.write.mode(SaveMode.Append).parquet(s"$outDir/lineage")
-        totalTriples += tc
-        totalErrors += ec
-        processed += 1
-      }
+    for (b <- 0 until buckets if !done.contains(b)) {
+      if (failAtBucket.contains(b)) throw new RuntimeException(s"injected failure at bucket $b")
+      val t0 = System.nanoTime()
+      val (bucketDocs, docsObs) = counted(stagedBucket(spark, staging, b))
+      val rows = ExpandStage.run(bucketDocs, ctxB).cache()
+      // min(doc_id), not an arbitrary survivor: the bucket spans many tasks
+      val (triples, triplesObs) = counted(ExpandStage.triples(rows)
+        .groupBy(tripleCols.map(col): _*).agg(min("doc_id").as("doc_id")))
+      val (errors, errorsObs) = counted(ExpandStage.errors(rows))
+      parquet(triples).parquet(s"$outDir/triples/bucket=$b")
+      parquet(errors).parquet(s"$outDir/errors/bucket=$b")
+      rows.unpersist()
+      val (dc, tc, ec) = (countOf(docsObs), countOf(triplesObs), countOf(errorsObs))
+      val lineage = Seq(PartitionLineage(b, dc, tc, ec, "done",
+        attempts.getOrElse(b, 0) + 1, (System.nanoTime() - t0) / 1000000)).toDS()
+      parquet(lineage, SaveMode.Append).parquet(s"$outDir/lineage")
+      totalTriples += tc
+      totalErrors += ec
+      processed += 1
     }
     RunReport(buckets, processed, done.size, totalTriples, totalErrors)
   }
 
-  /** Cross-bucket global dedup → final graph table. Group keys contain subj —
-    * high cardinality, so the rdf:type hot predicate does NOT skew this
-    * shuffle; AQE coalesces output partitions.
+  /** Cross-bucket global dedup → final graph table. `first_doc` is the
+    * smallest doc_id holding the triple; `support` is the number of buckets
+    * holding it (each bucket's triples are already distinct). Group keys
+    * contain subj — high cardinality, so the rdf:type hot predicate does NOT
+    * skew this shuffle; AQE coalesces output partitions.
     */
   def finalizeGraph(spark: SparkSession, outDir: String): DataFrame = {
-    val all = spark.read.parquet(s"$outDir/triples")
-    val graph = all.groupBy("subj", "pred", "obj_kind", "obj_value", "obj_datatype", "obj_lang", "graph")
+    val all = spark.read.schema(triplesSchema).parquet(s"$outDir/triples")
+    val graph = all.groupBy(tripleCols.map(col): _*)
       .agg(min("doc_id").as("first_doc"), count(lit(1)).as("support"))
-    graph.write.mode(SaveMode.Overwrite).parquet(s"$outDir/graph")
-    spark.read.parquet(s"$outDir/graph")
+    parquet(graph).parquet(s"$outDir/graph")
+    spark.read.schema(graphSchema).parquet(s"$outDir/graph")
   }
 }

@@ -1,10 +1,8 @@
 package graft.spark
 
 import graft.core._
-import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Dataset, SparkSession}
 
-/** Vendored remote-context pool (FIXTURES.md §4) + the broadcast resolver.
+/** Vendored remote-context pool (FIXTURES.md §4) and its resolver.
   *
   * Scale design: remote contexts are resolved ONCE on the driver and
   * broadcast — no per-row HTTP (north_star). The reference's own
@@ -50,19 +48,6 @@ object RemoteContextPool {
         catch { case _: JsonLdError => None }
       })
     }.toMap
-
-  /** Scan the corpus for distinct referenced context IRIs (cheap distinct on
-    * a projected column), resolve on the driver (vendored pool, then the
-    * optional fetcher — the production path puts an [[HttpDocumentLoader]]
-    * here), and broadcast. At 10^12 docs the distinct is over K≈5 values —
-    * the scan is pruned to the spans column only, and HTTP happens at most
-    * once per distinct IRI on the driver.
-    */
-  def broadcastResolved(spark: SparkSession, referenced: Dataset[String],
-      fetcher: Option[DocumentLoader] = None): Broadcast[Map[String, String]] = {
-    val iris = referenced.distinct().collect().toVector
-    spark.sparkContext.broadcast(resolveAll(iris, fetcher))
-  }
 
   def loaderFor(resolved: Map[String, String]): DocumentLoader =
     new DocumentLoader.MapLoader(resolved)

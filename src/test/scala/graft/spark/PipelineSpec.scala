@@ -82,12 +82,78 @@ class PipelineSpec extends AnyFunSuite {
     val resumed = Materialize.run(docs, out1, buckets = 4)
     assert(resumed.skipped == 2 && resumed.processed == 2)
     val full = Materialize.run(docs, out2, buckets = 4)
-    val g1 = Materialize.finalizeGraph(spark, out1).drop("first_doc").orderBy("subj", "pred", "obj_value").collect()
-    val g2 = Materialize.finalizeGraph(spark, out2).drop("first_doc").orderBy("subj", "pred", "obj_value").collect()
-    assert(g1.toSeq == g2.toSeq)
+    // full rows, first_doc and support included: both are independent of
+    // task order and of which run wrote which bucket
+    def graph(out: String) = {
+      val g = Materialize.finalizeGraph(spark, out)
+      g.orderBy(g.columns.toSeq.map(col): _*).collect().toSeq
+    }
+    assert(graph(out1) == graph(out2))
     // attempts: resumed buckets recorded attempt 1 (first completion)
     val lineage = spark.read.parquet(s"$out1/lineage")
     assert(lineage.count() == 4)
+  }
+
+  test("lineage counts equal the rows of each bucket's staging, triples and errors, fresh and resumed") {
+    import spark.implicits._
+    val hostile = (0 until 24).map(i => Doc(s"bad-$i", Seq(
+      Span("jsonld", "{not json", null, 1),
+      Span("jsonld", s"""{"@context":{"@vocab":"http://v/"},"@id":"http://s/bad$i","p":"ok"}""", null, 2))))
+    val docs = SyntheticDocs.generate(spark, 200, 4).union(spark.createDataset(hostile))
+    def checkLineage(out: String): Unit = {
+      val staging = Materialize.stagingDir(docs, out, 4)
+      val rows = spark.read.parquet(s"$out/lineage").as[PartitionLineage].collect().sortBy(_.bucket)
+      assert(rows.map(_.bucket).toSeq == (0 until 4))
+      rows.foreach { l =>
+        val b = l.bucket
+        assert(l.doc_count == spark.read.parquet(s"$staging/bucket=$b").count(), s"doc_count, bucket $b")
+        assert(l.triple_count == spark.read.parquet(s"$out/triples/bucket=$b").count(), s"triple_count, bucket $b")
+        assert(l.error_count == spark.read.parquet(s"$out/errors/bucket=$b").count(), s"error_count, bucket $b")
+      }
+      assert(rows.map(_.doc_count).sum == 224)
+      assert(rows.map(_.error_count).sum == 24)
+    }
+    val fresh = java.nio.file.Files.createTempDirectory("graft-lineage").toString
+    Materialize.run(docs, fresh, buckets = 4)
+    checkLineage(fresh)
+    val resumed = java.nio.file.Files.createTempDirectory("graft-lineage-resume").toString
+    intercept[RuntimeException] { Materialize.run(docs, resumed, buckets = 4, failAtBucket = Some(2)) }
+    assert(Materialize.run(docs, resumed, buckets = 4).processed == 2)
+    checkLineage(resumed)
+  }
+
+  test("buckets that receive no docs complete with zero counts") {
+    import spark.implicits._
+    val docs = spark.createDataset(Seq(Doc("only-doc", Seq(
+      Span("jsonld", """{"@context":{"@vocab":"http://v/"},"@id":"http://s/only","p":"x"}""", null, 0)))))
+    val out = java.nio.file.Files.createTempDirectory("graft-empty-buckets").toString
+    val report = Materialize.run(docs, out, buckets = 4)
+    assert(report.processed == 4 && report.triples > 0)
+    val lineage = spark.read.parquet(s"$out/lineage").as[PartitionLineage].collect()
+    assert(lineage.map(_.doc_count).sorted.toSeq == Seq(0L, 0L, 0L, 1L))
+    assert(lineage.count(_.triple_count == 0) == 3)
+  }
+
+  test("html spans resolve remote contexts in Materialize exactly as expandDoc does") {
+    import spark.implicits._
+    val ctx = s"${RemoteContextPool.baseIri}vocab.jsonld"
+    val docs = (0 until 12).map { i =>
+      val page = s"""<html><head><script type="application/ld+json">
+        |{"@context":"$ctx","@id":"http://s/page$i","name":"Page $i","topic":"t${i % 3}"}
+        |</script></head><body>page $i</body></html>""".stripMargin
+      Doc(s"html-$i", Seq(Span("html", page, null, 0)))
+    }
+    val out = java.nio.file.Files.createTempDirectory("graft-html").toString
+    val report = Materialize.run(spark.createDataset(docs), out, buckets = 2)
+    assert(report.errors == 0)
+    assert(spark.read.parquet(s"$out/errors").count() == 0)
+    def key(t: TripleRow) = (t.subj, t.pred, t.obj_kind, t.obj_value, t.obj_datatype, t.obj_lang, t.graph)
+    val expected = docs.flatMap(d => ExpandStage.expandDoc(d, RemoteContextPool.fullLoader, JsonLdOptions(),
+      ExpandStage.aliasDictionary)._1).map(key).toSet
+    assert(expected.exists(_._2 == "http://schema.example/name"), "the context's term must expand")
+    val graph = Materialize.finalizeGraph(spark, out).drop("first_doc", "support")
+      .as[(String, String, String, String, String, String, String)].collect()
+    assert(graph.length == expected.size && graph.toSet == expected)
   }
 
   test("distributed canonicalization (iterative joins) is deterministic, complete, and structure-preserving") {

@@ -149,6 +149,35 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("Exchange"), "expansion stage shuffles:\n" + p.take(2000))
   }
 
+  test("Materialize staging is shuffle-free and one staged bucket keeps the input's parallelism") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val docs = SyntheticDocs.generate(spark, 200, 4)
+    val out = java.nio.file.Files.createTempDirectory("graft-staging").toString
+    val staging = Materialize.stagingDir(docs, out, 2)
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = qe.logical match {
+        case w: InsertIntoHadoopFsRelationCommand if w.outputPath.toString.endsWith(staging.split('/').last) =>
+          writes.add(qe.executedPlan.toString)
+        case _ =>
+      }
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Materialize.run(docs, out, buckets = 2)
+      // listener events arrive asynchronously
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (writes.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    assert(!writes.isEmpty, "the staging write was not observed")
+    writes.forEach(p => assert(!p.contains("Exchange"), "staging write shuffles:\n" + p.take(3000)))
+    val parts = Materialize.stagedBucket(spark, staging, 0).rdd.getNumPartitions
+    assert(parts > 1, s"a staged bucket is read by $parts task(s)")
+  }
+
   test("driver contract: entry() returns rows and every query runs at sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
     // every declared query must at least execute and return rows at the smoke scale
