@@ -12,20 +12,6 @@ import graft.spark.{ExpandStage, RemoteContextPool, SyntheticDocs}
   */
 object Bench {
 
-  private def session(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
-
   /** One timed pipeline run: expand `n` synthetic docs → count triples.
     * Returns (seconds, triples).
     */
@@ -89,7 +75,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = SparkEntry.defaultCpus
     // global wall-clock accounting: the driver kills the whole run at its
     // own budget (~580 s) measured from the sbt LAUNCH, not from main() —
     // anchor the elapsed clock at the launch (preMainOverheadSec) so every
@@ -101,7 +87,7 @@ object Bench {
     def mainElapsed: Double = (System.nanoTime() - mainT0) / 1e9 + preMainSec
     def note(msg: String): Unit = System.err.println(f"[bench] t=$mainElapsed%.0fs $msg")
     note(f"pre-main overhead $preMainSec%.0fs (sbt + JVM fork, on the driver kill clock)")
-    val spark = session(cpus)
+    val spark = SparkEntry.session(cpus)
 
     // ---- SCALING PHASE FIRST (north-rule gate): the serve probes get the
     // freshest budget and are torn down before the warmup/headline section,
@@ -703,7 +689,7 @@ object Bench {
       // beats no JSON line at the driver's kill deadline
       mode = "local-threads"
       def threadRun(n: Int): Double = {
-        val s = session(n)
+        val s = SparkEntry.session(n)
         try { pipelineRun(s, 30000, n); val (t, _) = pipelineRun(s, 300000, n); t }
         finally s.stop()
       }

@@ -14,9 +14,25 @@ import graft.spark._
   *     [--input <parquet dir of (doc_id, spans)>]
   */
 object Main {
+  private val Usage = "usage: graft.Main --out <dir> [--docs N] [--buckets N] [--input <parquet dir>]"
+  private val Flags = Set("--out", "--docs", "--buckets", "--input")
+
+  /** `--flag value` pairs; an unknown flag, a flag without a value or a
+    * missing `--out` is an error, never a silent default. */
+  def parseArgs(args: Array[String]): Map[String, String] = {
+    def bad(why: String) = throw new IllegalArgumentException(s"$why\n$Usage")
+    val opts = args.grouped(2).map {
+      case Array(k, v) if Flags(k) => k -> v
+      case Array(k, _) => bad(s"unknown flag: $k")
+      case Array(k) => bad(if (Flags(k)) s"missing value for $k" else s"unknown flag: $k")
+    }.toMap
+    if (!opts.contains("--out")) bad("--out <dir> is required")
+    opts
+  }
+
   def main(args: Array[String]): Unit = {
-    val opts = args.sliding(2, 2).collect { case Array(k, v) => k -> v }.toMap
-    val out = opts.getOrElse("--out", sys.error("--out <dir> is required"))
+    val opts = parseArgs(args)
+    val out = opts("--out")
     val buckets = opts.getOrElse("--buckets", "16").toInt
     val spark = SparkSession.builder().appName("graft-kg-construct").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -15,6 +15,27 @@ import graft.ops._
   */
 object SparkEntry {
 
+  /** Task slots for in-process sessions: `SPARK_GRAFT_CPUS`, else every core. */
+  def defaultCpus: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The session the queries are defined against: `local[cpus]` with one
+    * shuffle partition per slot, AQE on, UTC, the Graft SQL extensions.
+    */
+  def session(cpus: Int = defaultCpus): SparkSession = {
+    val s = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .appName("graft")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("ERROR")
+    s
+  }
+
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 

@@ -44,18 +44,18 @@ object Materialize {
     ds.write.mode(mode).option("compression", "zstd")
 
   /** Row count of `ds`, reported by the first action that runs it. */
-  private def counted[T](ds: Dataset[T]): (Dataset[T], Observation) = {
+  private[spark] def counted[T](ds: Dataset[T]): (Dataset[T], Observation) = {
     val obs = Observation()
     (ds.observe(obs, count(lit(1)).as("n")), obs)
   }
 
-  private def countOf(obs: Observation): Long = obs.get("n").asInstanceOf[Long]
+  private[spark] def countOf(obs: Observation): Long = obs.get("n").asInstanceOf[Long]
 
   /** Existence check through the Hadoop FileSystem for the path's scheme —
     * java.io.File is local-FS-only and silently reports false on HDFS/S3,
     * which would rewrite staging (and ignore lineage) every run.
     */
-  private def pathExists(spark: SparkSession, path: String): Boolean = {
+  private[spark] def pathExists(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }

@@ -6,19 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.core.{JsonLdOptions, Triple, BnodeCanon}
 
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val spark: SparkSession = graft.SparkEntry.session()
 }
 
 class PipelineSpec extends AnyFunSuite {
